@@ -14,7 +14,8 @@ Some operators MUST persist an intermediate:
 They cannot unpersist before returning: the caller's terminal action is what
 consumes the cache. Unpersisting eagerly would silently recompute. Instead
 each call site rotates: persisting call N unpersists call N-``keep``'s frame
-under the same tag, bounding live cache to ``keep`` intermediates per
+under the same tag (tags live in the session memo, so a new application
+starts with none), bounding live cache to ``keep`` intermediates per
 operator however many times the bench/driver loops (ADVICE r1: caches
 accumulated across the 83-query run with 'already cached' warnings).
 
@@ -32,7 +33,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-_LIVE: dict[str, list[DataFrame]] = {}
+from airflow_etl_elt_spark.session import scope
 
 
 def rotate_persist(
@@ -40,47 +41,23 @@ def rotate_persist(
 ) -> DataFrame:
     """Persist ``df`` (optionally materializing it with a count) after
     unpersisting all but the newest ``keep - 1`` frames previously
-    registered under ``tag``."""
-    live = _LIVE.setdefault(tag, [])
+    registered under ``tag`` in this session.
+
+    Frames with the same plan share ONE CacheManager entry, so a rotated-out
+    frame that ``sameSemantics`` a frame still live under the tag is only
+    forgotten, not unpersisted: unpersisting it would drop the cache the
+    newer frame reads (surrogate_key's offsets would then no longer match a
+    re-sampled range partitioning)."""
+    live = scope(df.sparkSession, "persisted").setdefault(tag, [])
     df = df.persist()
     if materialize:
-        no_aqe_count(df)
+        df.count()
     live.append(df)
     while len(live) > keep:
         prev = live.pop(0)
         try:
-            prev.unpersist()
+            if not any(prev.sameSemantics(d) for d in live):
+                prev.unpersist()
         except Exception:
             pass  # session may be gone; nothing to free
     return df
-
-
-def no_aqe_count(df: DataFrame) -> int:
-    """Run ``df.count()`` with adaptive execution OFF — for driver-side
-    bookkeeping actions (cache materialization, convergence probes) whose
-    plans are fixed: AQE submits each internal shuffle map stage as its
-    OWN job before the result job, paying one scheduling round-trip per
-    stage for re-optimization the action can't use (OPTIMIZATION r13 —
-    measured: dedup_minhash's sig materialization 2 jobs -> 1,
-    grouped_stats' box-prefilter action 4 -> 1). The conf is restored
-    before returning, so the QUERY plans consumers build stay adaptive."""
-    conf = df.sparkSession.conf
-    prev = conf.get("spark.sql.adaptive.enabled", "true")
-    try:
-        conf.set("spark.sql.adaptive.enabled", "false")
-        return df.count()
-    finally:
-        conf.set("spark.sql.adaptive.enabled", prev)
-
-
-def no_aqe_first(df: DataFrame):
-    """``df.first()`` with adaptive execution off — see ``no_aqe_count``."""
-    conf = df.sparkSession.conf
-    prev = conf.get("spark.sql.adaptive.enabled", "true")
-    try:
-        conf.set("spark.sql.adaptive.enabled", "false")
-        return df.first()
-    finally:
-        conf.set("spark.sql.adaptive.enabled", prev)
-
-

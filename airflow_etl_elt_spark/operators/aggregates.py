@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from airflow_etl_elt_spark.operators._cache import rotate_persist
+from airflow_etl_elt_spark.session import memo
 
 # Inputs whose Catalyst size estimate is below this buffer the whole group in
 # one exact-median aggregation state (F.median) — a single scan + shuffle.
@@ -472,9 +473,6 @@ def guarded_long_sum_agg(
     )
 
 
-_PLAN_SIZE_CACHE: dict[tuple[str, int], int] = {}
-
-
 def _plan_size_bytes(df: DataFrame) -> int:
     """Catalyst's size estimate for the optimized plan (bytes). This is the
     same statistic the optimizer itself uses to pick broadcast joins —
@@ -482,7 +480,7 @@ def _plan_size_bytes(df: DataFrame) -> int:
     and conservative. Returns a huge sentinel when unavailable so callers
     fall back to the scale-safe path.
 
-    Memoized per (application, semanticHash of the ANALYZED plan):
+    Memoized in the session memo per semanticHash of the ANALYZED plan:
     re-running optimization for the estimate costs ~34 ms of driver time,
     which cost-gated operators would otherwise re-pay on EVERY invocation;
     semanticHash is ~1.2 ms. The UNanalyzed plan string would be the wrong
@@ -492,16 +490,14 @@ def _plan_size_bytes(df: DataFrame) -> int:
     fixture files don't change mid-session.
     """
     try:
-        key = (
-            df.sparkSession.sparkContext.applicationId,
+        return memo(
+            df.sparkSession,
+            "plan_size",
             df.semanticHash(),
+            lambda: int(
+                df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+            ),
         )
-        cached = _PLAN_SIZE_CACHE.get(key)
-        if cached is not None:
-            return cached
-        size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-        _PLAN_SIZE_CACHE[key] = size
-        return size
     except Exception:
         return 1 << 62
 
@@ -842,12 +838,7 @@ def _exact_median_from_bounds(
     nlevels = levels_done
     bounds = rotate_persist(f"{tag}:l{nlevels}", bounds, materialize=False)
     if depth is None:
-        from airflow_etl_elt_spark.operators._cache import no_aqe_first
-
-        # non-adaptive driver probe (OPTIMIZATION r13): AQE splits this
-        # fixed one-row convergence aggregate into one job per internal
-        # stage — see _cache.no_aqe_count
-        worst = no_aqe_first(bounds.filter(~F.col("__done")).agg(F.max("__inb")))[0]
+        worst = bounds.filter(~F.col("__done")).agg(F.max("__inb")).first()[0]
         depth = (
             0
             if worst is None or worst <= _SELECT_MAX_ROWS
@@ -911,11 +902,7 @@ def _exact_median_from_bounds(
             box = box.crossJoin(
                 co_materialize.agg(F.count(F.lit(1)).alias("__com_n"))
             )
-        from airflow_etl_elt_spark.operators._cache import no_aqe_first
-
-        # non-adaptive (OPTIMIZATION r13): this fixed bookkeeping action
-        # ran as FOUR AQE stage-jobs at the 100x replica; one suffices
-        box = no_aqe_first(box)
+        box = box.first()
         pre = None
         if box["lo_open"] == 0 and box["glo"] is not None:
             pre = v >= float(box["glo"])
@@ -1141,17 +1128,6 @@ def grouped_stats(
     vals = df.filter(F.col(value_col).isNotNull()).select(
         group_col, vd.alias("__v")
     )
-    # r12 probe knob (VERDICT r11 stretch 7): the median machinery re-reads
-    # vals for each hist level + the selection scan — 2-3 parquet re-decodes
-    # of the 2-col projection (~0.32 s each at the 100x replica). "persist"
-    # serves those passes from a MEMORY_AND_DISK materialization instead
-    # (rotated per invocation, so fresh-mode benches stay fresh: every
-    # sample pays its own materialization). Probe-gated, default unchanged;
-    # measured A/B in scripts/exp_gs_vals_probe.py before any flip.
-    if os.environ.get("SPARK_GRAFT_GS_VALS", "scan") == "persist":
-        vals = rotate_persist(
-            f"grouped_stats_vals:{group_col}:{value_col}", vals, materialize=False
-        )
     tag = f"grouped_stats_med:{group_col}:{value_col}"
     with_stats = _usable_bounds(value_bounds)
     base_aggs = [

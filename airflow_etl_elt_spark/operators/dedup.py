@@ -35,6 +35,7 @@ from airflow_etl_elt_spark.operators.text import (
 )
 from pyspark.sql.functions import pandas_udf
 
+from airflow_etl_elt_spark.session import memo
 from airflow_etl_elt_spark.sources.readers import fan_out
 
 # Measurement hook: force the minhash verify-join broadcast gate on (True) /
@@ -232,29 +233,38 @@ def minhash_signatures(
     every core even from a few-big-files layout; no shuffle of text beyond
     that; signatures (64 longs/doc) are what flows onward.
     """
-    import random
-
-    # The UDF object is memoized per (applicationId, parameter tuple)
+    # The UDF object lives in the session memo per parameter tuple
     # (OPTIMIZATION r12, ADVICE r12): pandas_udf() registration costs
     # ~40 ms of py4j per call and the closure (seeded a/b permutation
     # arrays + shingle_k) is a pure function of the arguments — same UDF
-    # object, same execution. The applicationId key matters because a
-    # UserDefinedFunction lazily pins its JVM-side _judf to the session
-    # active at first use: reusing the object across spark.stop()/new
-    # session would hand out dead JVM references (the same staleness
-    # contract as _PARTITION_COUNT_CACHE and the reader relation cache).
-    cache_key = (
-        documents.sparkSession.sparkContext.applicationId,
-        num_hashes,
-        shingle_k,
-        seed,
+    # object, same execution. Session-scoped because a UserDefinedFunction
+    # lazily pins its JVM-side _judf to the session active at first use.
+    sig_udf = memo(
+        documents.sparkSession,
+        "minhash_sig_udf",
+        (num_hashes, shingle_k, seed),
+        lambda: _minhash_sig_udf(num_hashes, shingle_k, seed),
     )
-    cached_udf = _SIG_UDF_CACHE.get(cache_key)
-    if cached_udf is not None:
-        nonempty = documents.filter(F.size(ws_tokens(F.col(text_col))) > 0)
-        return fan_out(
-            nonempty.select(F.col(id_col).alias("id"), F.col(text_col))
-        ).select("id", cached_udf(text_col).alias("sig"))
+    # Null/empty docs are dropped BEFORE the UDF with a cheap column
+    # predicate (precisely the texts for which the UDF yields null: null or
+    # whitespace-only → zero tokens). Filtering on sig_udf's OUTPUT instead
+    # is a planner trap: Catalyst pushes the filter below the fan_out
+    # repartition and re-inlines the UDF into it, so the signature pass ran
+    # TWICE — once single-threaded on the pre-repartition layout (a whole
+    # corpus on one worker: measured 0.72 s of the old 0.92 s stage time at
+    # sf0.1) and again 32-way above. Same optimizer-trap family as the
+    # InferFiltersFromGenerate pushdown documented in SCALING.md.
+    # "has at least one token" in the portable ws_tokens contract — a
+    # trim-based emptiness test diverges between Java and DuckDB on
+    # unicode whitespace (see text.ws_tokens)
+    nonempty = documents.filter(F.size(ws_tokens(F.col(text_col))) > 0)
+    return fan_out(nonempty.select(F.col(id_col).alias("id"), F.col(text_col))).select(
+        "id", sig_udf(text_col).alias("sig")
+    )
+
+
+def _minhash_sig_udf(num_hashes: int, shingle_k: int, seed: int):
+    import random
 
     rng = random.Random(seed)
     a_np = np.array([rng.randrange(1, _P) for _ in range(num_hashes)], dtype=np.uint64)[:, None]
@@ -287,29 +297,7 @@ def minhash_signatures(
             out.append(m.astype(np.int64))
         return pd.Series(out)
 
-    # Null/empty docs are dropped BEFORE the UDF with a cheap column
-    # predicate (precisely the texts for which the UDF yields null: null or
-    # whitespace-only → zero tokens). Filtering on sig_udf's OUTPUT instead
-    # is a planner trap: Catalyst pushes the filter below the fan_out
-    # repartition and re-inlines the UDF into it, so the signature pass ran
-    # TWICE — once single-threaded on the pre-repartition layout (a whole
-    # corpus on one worker: measured 0.72 s of the old 0.92 s stage time at
-    # sf0.1) and again 32-way above. Same optimizer-trap family as the
-    # InferFiltersFromGenerate pushdown documented in SCALING.md.
-    # "has at least one token" in the portable ws_tokens contract — a
-    # trim-based emptiness test diverges between Java and DuckDB on
-    # unicode whitespace (see text.ws_tokens)
-    _SIG_UDF_CACHE[cache_key] = sig_udf
-    nonempty = documents.filter(F.size(ws_tokens(F.col(text_col))) > 0)
-    return fan_out(nonempty.select(F.col(id_col).alias("id"), F.col(text_col))).select(
-        "id", sig_udf(text_col).alias("sig")
-    )
-
-
-#: memoized signature UDF objects per (applicationId, num_hashes,
-#: shingle_k, seed) — pure
-#: code-object reuse, no data cached (see minhash_signatures).
-_SIG_UDF_CACHE: dict = {}
+    return sig_udf
 
 
 def _banded_ids(sigs: DataFrame, bands: int, rows_per_band: int) -> DataFrame:

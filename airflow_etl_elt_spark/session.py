@@ -14,11 +14,16 @@ unchanged on local[N]:
   (cluster: set spark.sql.shuffle.partitions ~2-3x total cores; AQE
   coalesces down after the fact, so erring high is safe).
 - UTC session timezone so timestamp semantics match the DuckDB oracle.
+
+The session also owns everything the library remembers between calls — see
+``scope``/``memo``/``clear`` at the bottom of this module.
 """
 
 from __future__ import annotations
 
 import os
+import threading
+from typing import Any, Callable
 
 from pyspark.sql import SparkSession
 
@@ -115,3 +120,55 @@ def get_session(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+# --------------------------------------------------------------------------
+# Session-scoped memo
+# --------------------------------------------------------------------------
+#
+# What the library remembers between calls — resolved parquet relations,
+# Catalyst size estimates and partition counts, pandas UDF objects, query
+# parameters, prepared catalog plans, persisted operator intermediates and
+# at-rest layout overrides — is only valid for the SparkContext that built
+# it: DataFrames and UDFs pin JVM objects of that context. So it all lives
+# in named scopes here, and every scope is dropped together the first time
+# a call arrives from a different applicationId.
+
+_SCOPES: dict[str, dict] = {}
+_app_id: str | None = None
+_SWITCH = threading.Lock()
+_MISSING = object()
+
+
+def scope(spark: SparkSession | None, name: str) -> dict:
+    """The dict named ``name`` for ``spark``'s application, created empty on
+    first use. A new applicationId drops every scope first. ``spark=None``
+    returns the current application's dict without that check — for
+    invalidation hooks that are handed no session."""
+    global _app_id
+    if spark is not None:
+        app = spark.sparkContext.applicationId
+        if app != _app_id:
+            with _SWITCH:
+                if app != _app_id:
+                    _SCOPES.clear()
+                    _app_id = app
+    return _SCOPES.setdefault(name, {})
+
+
+def memo(
+    spark: SparkSession | None, name: str, key: Any, build: Callable[[], Any]
+) -> Any:
+    """``scope(spark, name)[key]``, calling ``build()`` to fill it on a miss.
+    Two threads missing together may both build; the last write wins, so
+    ``build`` must be a pure function of ``key`` within the session."""
+    d = scope(spark, name)
+    value = d.get(key, _MISSING)
+    if value is _MISSING:
+        value = d[key] = build()
+    return value
+
+
+def clear() -> None:
+    """Empty every scope (the next call rebuilds what it needs)."""
+    _SCOPES.clear()

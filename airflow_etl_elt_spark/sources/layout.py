@@ -56,6 +56,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from airflow_etl_elt_spark.session import scope
+
 #: bump to invalidate every materialized layout (schema of the marker, the
 #: bucket/sort specs below, or the write recipe changed)
 _LAYOUT_VERSION = "v1"
@@ -84,14 +86,13 @@ MULTI_FILE: dict[str, tuple[str, int]] = {
     "part": ("p_partkey", 8),
 }
 
-# (applicationId, abs sf_dir, table) -> entry dict; see resolve().
-_REGISTRY: dict[tuple[str, str, str], dict] = {}
-
-# applicationId -> prior value ('' = unset) of the bucketed-scan ordering
+# Session memo scopes (session.scope): the active overrides, keyed
+# (abs sf_dir, table) -> entry dict (see resolve()); the suspended ones,
+# same keys; and the prior value ('' = unset) of the bucketed-scan ordering
 # flag, saved by prepare_at_rest_layout so suspend()/clear() can restore it
 # (ADVICE r7: the flag must not leak into 'layout off' A/B samples or later
 # non-layout work in the same session).
-_SAVED_ORDERING_CONF: dict[str, str] = {}
+_ACTIVE, _SUSPENDED, _SAVED_CONF = "layout", "layout_suspended", "layout_saved_conf"
 
 _ORDERING_FLAG = "spark.sql.legacy.bucketedTableScan.outputOrdering"
 
@@ -218,16 +219,15 @@ def prepare_at_rest_layout(spark: SparkSession, sf_dir: str) -> dict[str, str]:
     # so turning it on elides the window/SMJ sorts the layout already paid.
     # Save the prior value so suspend()/clear() can restore it (the flag is
     # part of the override state, not session state — ADVICE r7).
-    app_id = spark.sparkContext.applicationId
-    if app_id not in _SAVED_ORDERING_CONF:
-        _SAVED_ORDERING_CONF[app_id] = _read_ordering_conf(spark)
+    saved = scope(spark, _SAVED_CONF)
+    if _ORDERING_FLAG not in saved:
+        saved[_ORDERING_FLAG] = _read_ordering_conf(spark)
     spark.conf.set(_ORDERING_FLAG, "true")
     warehouse = spark.conf.get(
         "spark.sql.warehouse.dir", "/tmp/spark-graft-warehouse"
     ).removeprefix("file:")
-    already = {
-        k[2]: v["path"] for k, v in _REGISTRY.items() if k[0] == app_id and k[1] == sf_abs
-    }
+    active = scope(spark, _ACTIVE)
+    already = {n: v["path"] for (sfd, n), v in active.items() if sfd == sf_abs}
     if already:  # this session already prepared sf_dir; re-registering after
         return already  # clear() is a dict rebuild, not a catalog round trip
     locations: dict[str, str] = {}
@@ -289,7 +289,7 @@ def prepare_at_rest_layout(spark: SparkSession, sf_dir: str) -> dict[str, str]:
                     },
                     fh,
                 )
-        _REGISTRY[(app_id, sf_abs, name)] = {
+        active[(sf_abs, name)] = {
             "kind": "bucketed",
             "table": tbl,
             "bucket_cols": cols,
@@ -323,7 +323,7 @@ def prepare_at_rest_layout(spark: SparkSession, sf_dir: str) -> dict[str, str]:
                 )
             with open(_marker_path(out_dir), "w") as fh:
                 json.dump({"source": sf_abs, "identity": ident, "rows": n_out}, fh)
-        _REGISTRY[(app_id, sf_abs, name)] = {"kind": "files", "path": out_dir}
+        active[(sf_abs, name)] = {"kind": "files", "path": out_dir}
         locations[name] = out_dir
     if locations:
         _invalidate_plan_cache()
@@ -347,10 +347,7 @@ def resolve(spark: SparkSession, sf_dir: str, name: str) -> DataFrame | None:
     """read_table hook: the overridden relation for (sf_dir, table) in THIS
     session, or None when no layout was prepared (the default everywhere
     except the bench path)."""
-    if not _REGISTRY:
-        return None
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir), name)
-    entry = _REGISTRY.get(key)
+    entry = scope(spark, _ACTIVE).get((os.path.abspath(sf_dir), name))
     if entry is None:
         return None
     df = entry.get("df")
@@ -369,26 +366,19 @@ def bucketed_on(
     """True iff the layout serves ``name`` bucketed exactly on ``cols`` —
     queries use this to pick the exchange-free sort-merge shape over a
     fact-sized broadcast build."""
-    if not _REGISTRY:
-        return False
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir), name)
-    entry = _REGISTRY.get(key)
+    entry = scope(spark, _ACTIVE).get((os.path.abspath(sf_dir), name))
     return entry is not None and entry.get("bucket_cols") == cols
 
 
 def duckdb_path(sf_dir: str, name: str, spark: SparkSession | None = None) -> str | None:
     """Glob over the rewritten files for the bench's DuckDB views, so both
     engines read identical bytes. None when the table wasn't rewritten.
-    Pass ``spark`` to restrict the lookup to that session's overrides
-    (ADVICE r7: without it, another session's entry for the same sf_dir
-    could redirect the views)."""
-    app_id = spark.sparkContext.applicationId if spark is not None else None
-    for (aid, sfd, n), entry in _REGISTRY.items():
-        if app_id is not None and aid != app_id:
-            continue
-        if n == name and sfd == os.path.abspath(sf_dir):
-            return os.path.join(entry["path"], "*.parquet")
-    return None
+    Pass ``spark`` to make sure the lookup sees that session's overrides
+    (ADVICE r7: another application's entries for the same sf_dir must
+    never redirect the views — the session memo drops them on the switch);
+    without it, the current application's overrides are read."""
+    entry = scope(spark, _ACTIVE).get((os.path.abspath(sf_dir), name))
+    return None if entry is None else os.path.join(entry["path"], "*.parquet")
 
 
 def _read_ordering_conf(spark: SparkSession) -> str:
@@ -404,8 +394,7 @@ def _read_ordering_conf(spark: SparkSession) -> str:
 def _restore_ordering_conf(spark: SparkSession) -> None:
     """Put the bucketed-scan ordering flag back to its pre-prepare value
     once this session has no active overrides left."""
-    app_id = spark.sparkContext.applicationId
-    prior = _SAVED_ORDERING_CONF.pop(app_id, None)
+    prior = scope(spark, _SAVED_CONF).pop(_ORDERING_FLAG, None)
     if prior is None:
         return
     if prior == "":
@@ -420,23 +409,18 @@ def clear(spark: SparkSession | None = None) -> None:
     overrides), and restore the session conf prepare() touched. Files stay
     on disk."""
     if spark is None:
-        _REGISTRY.clear()
-        _SUSPENDED.clear()
-        _SAVED_ORDERING_CONF.clear()
+        for name in (_ACTIVE, _SUSPENDED, _SAVED_CONF):
+            scope(None, name).clear()
         _invalidate_plan_cache()
         return
-    app_id = spark.sparkContext.applicationId
     dropped = False
-    for store in (_REGISTRY, _SUSPENDED):
-        for key in [k for k in store if k[0] == app_id]:
-            del store[key]
-            dropped = True
+    for name in (_ACTIVE, _SUSPENDED):
+        store = scope(spark, name)
+        dropped = dropped or bool(store)
+        store.clear()
     _restore_ordering_conf(spark)
     if dropped:
         _invalidate_plan_cache()
-
-
-_SUSPENDED: dict[tuple[str, str, str], dict] = {}
 
 
 def suspend(spark: SparkSession) -> None:
@@ -445,25 +429,22 @@ def suspend(spark: SparkSession) -> None:
     them with zero catalog round trips. The bucketed-scan ordering conf is
     restored to its pre-prepare value too, so 'layout off' samples run under
     pristine session state (ADVICE r7)."""
-    app_id = spark.sparkContext.applicationId
-    moved = False
-    for key in [k for k in _REGISTRY if k[0] == app_id]:
-        _SUSPENDED[key] = _REGISTRY.pop(key)
-        moved = True
-    if moved:
-        prior = _SAVED_ORDERING_CONF.get(app_id)
+    active, suspended = scope(spark, _ACTIVE), scope(spark, _SUSPENDED)
+    if active:
+        suspended.update(active)
+        active.clear()
+        saved = scope(spark, _SAVED_CONF)
+        prior = saved.get(_ORDERING_FLAG)
         _restore_ordering_conf(spark)
         if prior is not None:  # keep for resume()/clear()
-            _SAVED_ORDERING_CONF[app_id] = prior
+            saved[_ORDERING_FLAG] = prior
         _invalidate_plan_cache()
 
 
 def resume(spark: SparkSession) -> None:
-    app_id = spark.sparkContext.applicationId
-    moved = False
-    for key in [k for k in _SUSPENDED if k[0] == app_id]:
-        _REGISTRY[key] = _SUSPENDED.pop(key)
-        moved = True
-    if moved:
+    active, suspended = scope(spark, _ACTIVE), scope(spark, _SUSPENDED)
+    if suspended:
+        active.update(suspended)
+        suspended.clear()
         spark.conf.set(_ORDERING_FLAG, "true")  # overrides active again
         _invalidate_plan_cache()

@@ -22,10 +22,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-# (applicationId, path) -> resolved base DataFrame; see read_table.
-_RELATION_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-_COLUMN_STATS_CACHE: dict[tuple[str, str], tuple[float, float, int] | None] = {}
+from airflow_etl_elt_spark.session import memo, scope
 
 
 def table_column_stats(
@@ -42,12 +39,15 @@ def table_column_stats(
     are exact (string truncation concerns don't apply), but consumers must
     treat these as PLANNING hints only — ``grouped_exact_median`` stays
     exact under arbitrary bounds by construction (wrong bounds clamp into
-    edge cells and only slow convergence)."""
+    edge cells and only slow convergence).
+
+    Memoized per (path, column) in the current session's memo; footers
+    don't depend on the session, so no session is needed to read them."""
     path = os.path.join(sf_dir, f"{name}.parquet")
-    key = (path, column)
-    if key in _COLUMN_STATS_CACHE:
-        return _COLUMN_STATS_CACHE[key]
-    res: tuple[float, float, int] | None = None
+    return memo(None, "column_stats", (path, column), lambda: _footer_stats(path, column))
+
+
+def _footer_stats(path: str, column: str) -> tuple[float, float, int] | None:
     try:
         import glob as _glob
 
@@ -73,21 +73,17 @@ def table_column_stats(
                 lo, hi = float(st.min), float(st.max)
                 mn = lo if mn is None else min(mn, lo)
                 mx = hi if mx is None else max(mx, hi)
-        if mn is not None:
-            res = (mn, mx, rows)
+        return None if mn is None else (mn, mx, rows)
     except Exception:
-        res = None
-    _COLUMN_STATS_CACHE[key] = res
-    return res
+        return None
 
 
 def invalidate_relation(path: str) -> None:
-    """Drop any cached relation for ``path`` (all sessions). Sinks that
-    REWRITE a table in place (replace_table, upsert_by_key) must call this:
-    a cached DataFrame pins the old file listing, so post-rewrite reads
-    through the cache would hit deleted files or stale data."""
-    for key in [k for k in _RELATION_CACHE if k[1] == path]:
-        del _RELATION_CACHE[key]
+    """Drop any cached relation for ``path``. Sinks that REWRITE a table in
+    place (replace_table, upsert_by_key) must call this: a cached DataFrame
+    pins the old file listing, so post-rewrite reads through the cache would
+    hit deleted files or stale data."""
+    scope(None, "relations").pop(path, None)
 
 
 def normalize_columns(df: DataFrame) -> DataFrame:
@@ -135,42 +131,34 @@ def fan_out(
     downstream is far heavier per byte (interpreted HOF folds, Python
     image decoding) pass their own ``min_bytes`` (0 = always fan out) —
     rolling_fingerprint measured 0.16 -> 0.45 s at sf0.1 under the default
-    gate before its override.
+    gate before its override. The gate applies only when ``min_partitions``
+    is None: an explicit partition count is honoured whatever the size.
     """
     target = min_partitions or df.sparkSession.sparkContext.defaultParallelism
     if _partition_count(df) >= target:
         return df
-    from airflow_etl_elt_spark.operators.aggregates import _plan_size_bytes
+    if min_partitions is None:
+        from airflow_etl_elt_spark.operators.aggregates import _plan_size_bytes
 
-    gate = FAN_OUT_MIN_BYTES if min_bytes is None else min_bytes
-    if _plan_size_bytes(df) < gate:
-        return df
+        gate = FAN_OUT_MIN_BYTES if min_bytes is None else min_bytes
+        if _plan_size_bytes(df) < gate:
+            return df
     return df.repartition(target)
 
 
-_PARTITION_COUNT_CACHE: dict[tuple[str, int], int] = {}
-
-
 def _partition_count(df: DataFrame) -> int:
-    """Planned partition count of ``df``, memoized per (application,
-    semanticHash of the analyzed plan). ``df.rdd.getNumPartitions()`` costs
+    """Planned partition count of ``df``, memoized in the session memo per
+    semanticHash of the analyzed plan. ``df.rdd.getNumPartitions()`` costs
     ~60 ms of driver time per call (full physical planning + RDD
     conversion) and fan_out callers re-pay it on every fresh build; the
     count is a pure function of the immutable fixture layout + session
     parallelism, so the memo has the same staleness contract as the
-    reader's relation cache and _PLAN_SIZE_CACHE (OPTIMIZATION r12)."""
+    reader's relation cache and the plan-size estimate (OPTIMIZATION r12)."""
     try:
-        key = (
-            df.sparkSession.sparkContext.applicationId,
-            df.semanticHash(),
-        )
+        key = df.semanticHash()
     except Exception:
         return df.rdd.getNumPartitions()
-    n = _PARTITION_COUNT_CACHE.get(key)
-    if n is None:
-        n = df.rdd.getNumPartitions()
-        _PARTITION_COUNT_CACHE[key] = n
-    return n
+    return memo(df.sparkSession, "partition_count", key, lambda: df.rdd.getNumPartitions())
 
 
 def read_csv_normalized(
@@ -267,14 +255,14 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # Catalog-style relation cache: re-resolving the same path re-lists files
     # and re-reads parquet footers on the DRIVER every time (~50-150 ms per
     # table), which a real engine amortizes in its catalog (Spark's own
-    # spark.table does the same via CachedDataSourceTable). Keyed by
-    # applicationId so a restarted session never sees relations bound to a
+    # spark.table does the same via CachedDataSourceTable). Held in the
+    # session memo so a restarted session never sees relations bound to a
     # dead SparkContext. DataFrames are immutable, so sharing one base
     # relation across queries is safe. Data itself is NOT cached.
-    key = (spark.sparkContext.applicationId, path)
-    cached = _RELATION_CACHE.get(key)
-    if cached is not None:
-        return cached
+    return memo(spark, "relations", path, lambda: _scan(spark, path, name))
+
+
+def _scan(spark: SparkSession, path: str, name: str) -> DataFrame:
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         df = spark.read.parquet(path)
@@ -292,7 +280,6 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
                 df = df.withColumn(c, F.col(c).cast("timestamp"))
     else:
         df = spark.read.parquet(path)
-    _RELATION_CACHE[key] = df
     return df
 
 

@@ -194,17 +194,30 @@ def test_ordering_conf_restored_on_suspend_and_clear(spark, rewritten_layout):
     assert spark.conf.get(flag) == "true"
 
 
-def test_duckdb_path_scoped_to_session(spark, rewritten_layout):
-    """duckdb_path(spark=...) must ignore another session's registry entries
-    for the same sf_dir."""
+def test_duckdb_path_scoped_to_session(spark, rewritten_layout, monkeypatch):
+    """duckdb_path(spark=...) must never see another application's layout
+    entries for the same sf_dir: the session memo drops them the moment a
+    call arrives from this application."""
+    from types import SimpleNamespace
+
+    from airflow_etl_elt_spark import session
+
     own = layout.duckdb_path(SF, "orders", spark)
     assert own is not None and own.endswith("*.parquet")
-    foreign_key = ("some-other-app-id", os.path.abspath(SF), "orders")
-    layout._REGISTRY[foreign_key] = {"kind": "files", "path": "/nonexistent/dir"}
-    try:
-        assert layout.duckdb_path(SF, "orders", spark) == own
-    finally:
-        del layout._REGISTRY[foreign_key]
+    # run the switches on a private memo so this session's state survives
+    monkeypatch.setattr(session, "_SCOPES", {})
+    monkeypatch.setattr(session, "_app_id", session._app_id)
+    foreign = SimpleNamespace(
+        sparkContext=SimpleNamespace(applicationId="some-other-app-id")
+    )
+    session.scope(foreign, "layout")[(os.path.abspath(SF), "orders")] = {
+        "kind": "files",
+        "path": "/nonexistent/dir",
+    }
+    assert layout.duckdb_path(SF, "orders", foreign).startswith("/nonexistent/")
+    assert layout.duckdb_path(SF, "orders", spark) is None
+    layout.prepare_at_rest_layout(spark, SF)
+    assert layout.duckdb_path(SF, "orders", spark) == own
 
 
 def test_source_identity_tracks_fixture_rewrites(tmp_path):

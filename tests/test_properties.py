@@ -444,14 +444,58 @@ def test_surrogate_key_distributed_two_live_results(spark):
 def test_rotate_persist_keep_bounds_live_cache(spark):
     """The rotation still bounds the live cache: under keep=1 a third call
     leaves exactly one persisted frame under the tag; under keep=2, two."""
-    from airflow_etl_elt_spark.operators._cache import _LIVE, rotate_persist
+    from airflow_etl_elt_spark.operators._cache import rotate_persist
+    from airflow_etl_elt_spark.session import scope
 
+    live = scope(spark, "persisted")
     for tag, keep, want in (("__t_k1", 1, 1), ("__t_k2", 2, 2)):
         for i in range(3):
             rotate_persist(tag, spark.range(i + 1), keep=keep)
-        assert len(_LIVE[tag]) == want
-        for df in _LIVE.pop(tag):
+        assert len(live[tag]) == want
+        for df in live.pop(tag):
             df.unpersist()
+
+
+def test_rotate_persist_leaves_session_conf_alone(spark, monkeypatch):
+    """A materializing rotate_persist sets no session conf: flipping the
+    session-global spark.sql.adaptive.enabled around its count would race
+    every other thread planning on the session (Pipeline.fan_out)."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    from airflow_etl_elt_spark.operators._cache import rotate_persist
+    from airflow_etl_elt_spark.session import scope
+
+    keys = []
+    real_set = RuntimeConfig.set
+
+    def recording_set(self, key, value):
+        keys.append(key)
+        return real_set(self, key, value)
+
+    monkeypatch.setattr(RuntimeConfig, "set", recording_set)
+    rotate_persist("__t_conf", spark.range(100).selectExpr("id % 7 AS k"))
+    monkeypatch.undo()
+    for df in scope(spark, "persisted").pop("__t_conf"):
+        df.unpersist()
+    assert "spark.sql.adaptive.enabled" not in keys
+
+
+def test_surrogate_key_repeated_calls_stay_contiguous(spark, tmp_path):
+    """Repeated surrogate_key calls over one input each number 1..n. The
+    calls' range-repartitioned frames share one cache entry, so rotating out
+    the first must not unpersist what the third still reads (its offsets
+    would then stop matching a re-sampled range partitioning)."""
+    from airflow_etl_elt_spark.operators.relational import surrogate_key
+
+    n = 20_000
+    path = str(tmp_path / "t.parquet")
+    spark.range(n).selectExpr("id AS k", "(id * 7919) % 1000 AS v").coalesce(
+        1
+    ).write.parquet(path)
+    for call in range(3):
+        out = surrogate_key(spark.read.parquet(path), order_by=["v", "k"])
+        ids = sorted(r["id"] for r in out.select("id").collect())
+        assert ids == list(range(1, n + 1)), f"call {call + 1}"
 
 
 def test_exact_median_histogram_regimes(spark, monkeypatch):

@@ -175,3 +175,13 @@ def test_derived_lineitem_ext_matches_oracle_cte(spark):
     )
     got = sorted(tuple(r) for r in rows)
     assert got == want
+
+
+def test_fan_out_honours_explicit_min_partitions(spark):
+    """The size gate keeps small inputs on their natural layout only when
+    the caller leaves min_partitions unset; an explicit count is honoured."""
+    from airflow_etl_elt_spark.sources.readers import fan_out
+
+    small = spark.range(0, 100, 1, 1)
+    assert fan_out(small).rdd.getNumPartitions() == 1
+    assert fan_out(small, min_partitions=4).rdd.getNumPartitions() == 4

@@ -1,8 +1,9 @@
 """End-to-end wine pipelines against the reference's golden values
 (BASELINE.md / FIXTURES.md §1, computed from the reference dataset).
 
-The fixture CSV is synthesized wine-shaped data unless the reference CSV is
-present, in which case the exact golden values are pinned:
+The fixture CSV is the package's deterministic wine-shaped CSV
+(``queries.WINE_CSV``) unless the reference CSV is present, in which case the
+exact golden values are pinned:
 4,898 rows; quality>=7 → 1,060; total_sulfur_dioxide<125 → 2,005;
 mean(alcohol): q7=11.3679, q8=11.6360, q9=12.1800.
 """
@@ -18,25 +19,10 @@ REF_CSV = "/root/reference/data/winequality-white.csv"
 
 
 @pytest.fixture(scope="module")
-def wine_csv(tmp_path_factory):
-    if os.path.exists(REF_CSV):
-        return REF_CSV
-    # synthesize a deterministic wine-shaped CSV with spaces in headers
-    import random
+def wine_csv():
+    from airflow_etl_elt_spark.queries import WINE_CSV
 
-    rng = random.Random(7)
-    path = tmp_path_factory.mktemp("wine") / "wine.csv"
-    cols = [
-        "fixed acidity", "volatile acidity", "citric acid", "residual sugar",
-        "chlorides", "free sulfur dioxide", "total sulfur dioxide", "density",
-        "pH", "sulphates", "alcohol", "quality",
-    ]
-    with open(path, "w") as f:
-        f.write(";".join(cols) + "\n")
-        for _ in range(1000):
-            feats = [round(rng.uniform(0, 200), 3) for _ in range(11)]
-            f.write(";".join(map(str, feats)) + f";{rng.randint(3, 9)}\n")
-    return str(path)
+    return REF_CSV if os.path.exists(REF_CSV) else WINE_CSV
 
 
 def test_wine_etl_elt_end_to_end(spark, wine_csv, tmp_path):
